@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Batch sinks (SURVEY.md S8-S10).
   *
@@ -18,6 +21,31 @@ object Sinks {
   def overwriteParquet(df: DataFrame, path: String): Unit =
     AtomicDir.replaceWith(df, path)(
       (d, staging) => d.write.mode("overwrite").parquet(staging))
+
+  /** Row count of the parquet table at `path`, summed from the footers
+    * of its data files on the driver: no Spark job, one footer read per
+    * file. Equal to `spark.read.parquet(path).count()` because the files
+    * are chosen the way Spark's file index chooses them: subdirectories
+    * are walked, names starting with `.` or with `_` (unless they hold
+    * `=`, a partition directory) are skipped along with in-flight
+    * `._COPYING_` uploads; every other file is read as parquet. Meant
+    * for tables a sink has just written, whose file count is small. */
+  def parquetRowCount(spark: SparkSession, path: String): Long = {
+    val root = new HPath(path)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")
+    def rows(st: FileStatus): Long =
+      if (st.isDirectory) fs.listStatus(st.getPath).iterator
+        .filterNot(c => hidden(c.getPath.getName)).map(rows).sum
+      else {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }
+    rows(fs.getFileStatus(root))
+  }
 
   /** 100 TB layout: overwrite partitioned by a derived date column so
     * time-range queries prune files (dynamic partition overwrite only

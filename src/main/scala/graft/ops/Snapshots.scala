@@ -3350,7 +3350,8 @@ object Snapshots {
     * aggregate job, which measured as ~55% of a whole append at
     * fixture scale (tools/CommitProbe: 0.30 s of a 0.53 s append).
     * Everything else — and any column whose footer failed to yield an
-    * exact stat for EVERY staged file (NaN bounds, missing stats) —
+    * exact stat for EVERY staged file (NaN bounds, missing stats,
+    * dates written in Spark's LEGACY datetime-rebase mode) —
     * falls back to the original aggregate, so the emitted lines are
     * exactly what the old single-pass aggregate produced
     * (StagedStatsSpec asserts line-level parity). */
@@ -7908,6 +7909,16 @@ object Snapshots {
     import scala.jdk.CollectionConverters._
     val blocks = md.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
+    // a writer in LEGACY datetime-rebase mode stores hybrid-calendar
+    // days/micros (Spark reads them back through a rebase); decoding
+    // them as proleptic Gregorian would shift pre-1582 bounds — fail
+    // open so those columns take the aggregate path
+    val legacyDatetime = md.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.legacyDateTime")
+    def rebased(dt: DataType): Boolean = legacyDatetime && (dt match {
+      case DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    })
     val lines = want.flatMap { case (name, dt) =>
       if (rows == 0L)
         Some(s"#stats\t$rel\t0\t${enc(name)}\t0\tnull\tnull")
@@ -7942,7 +7953,7 @@ object Snapshots {
               val live = chunks.zip(sts).filter { case (c, s) =>
                 s.getNumNulls < c.getValueCount
               }.map(_._2)
-              if (live.exists(!_.hasNonNullValue)) None
+              if (live.exists(!_.hasNonNullValue) || rebased(dt)) None
               else footerMinMax(dt, chunks.head, live, sessionTz).map {
                 case (mn, mx) =>
                   s"#stats\t$rel\t$rows\t${enc(name)}\t$nulls\t" +

@@ -22,10 +22,23 @@ import org.apache.spark.sql.functions._
   *     extra.
   *   - the newest row per key is `row_number() == 1` over the same spec.
   *
+  * Horizon frames grow from the partition start:
+  * `rowsBetween(unboundedPreceding, N-1)`. Only the newest row survives
+  * the `row_number() == 1` filter, and for that row the growing frame
+  * and the sliding frame `rowsBetween(currentRow, N-1)` are the same
+  * rows — there is nothing before the first row — added in the same
+  * order, so the sums are bitwise equal for decimal and double values
+  * alike. The cost differs: Spark re-aggregates a sliding frame from
+  * scratch on every row, O(n·ΣN) additions per partition (435 per row
+  * for the six reference horizons), while a growing frame adds one row
+  * per output row, O(n). Every row of the partition still gets a value;
+  * the filter runs after the Window operator.
+  *
   * Numeric determinism: trailing means are computed as
   * `cast(sum(decimal) as double) / N` rather than floating `avg` so results
   * are bitwise-reproducible across engines and across partition layouts
   * (decimal addition is exact and associative; double addition is not).
+  * Double values are summed newest-first, one row at a time.
   */
 object Stats {
 
@@ -64,9 +77,9 @@ object Stats {
       .withColumn("__rn", row_number().over(w))
       .withColumn("__cnt", count(lit(1)).over(wAll))
     val withMeans = horizons.foldLeft(base) { (acc, h) =>
-      // frame = this row (the newest) and the N-1 rows after it in desc
-      // order = the N most recent observations.
-      val frame = w.rowsBetween(Window.currentRow, h.sessions - 1)
+      // at the newest row (the only one kept) this frame is that row and
+      // the N-1 after it in desc order: the N most recent observations
+      val frame = w.rowsBetween(Window.unboundedPreceding, h.sessions - 1)
       acc.withColumn(
         h.name,
         when(col("__cnt") >= h.sessions,
@@ -80,21 +93,28 @@ object Stats {
   }
 
   /** Wall-clock variant: trailing mean over a time range rather than a row
-    * count — the range-frame generalization noted in SURVEY.md §2.5. Frames
-    * are `rangeBetween(-seconds, 0)` over epoch seconds ascending. */
+    * count — the range-frame generalization noted in SURVEY.md §2.5. At
+    * the newest row a window covers every observation whose epoch second
+    * lies in `[t - seconds, t]`, ties included. The frame runs over epoch
+    * seconds descending, `rangeBetween(unboundedPreceding, seconds)`: the
+    * rows before the newest one are its peers, so at that row it equals
+    * the ascending `rangeBetween(-seconds, 0)` frame, and it grows by
+    * O(1) per row instead of being re-aggregated per row. The sum runs
+    * newest-first; pass an exact (decimal) value for results that do
+    * not depend on addition order. */
   def trailingByTime(
       df: DataFrame,
       key: String,
       time: String,
       value: Column,
       windows: Seq[(String, Long)]): DataFrame = {
-    val w = Window.partitionBy(key).orderBy(col(time).cast("long").asc)
+    val w = Window.partitionBy(key).orderBy(col(time).cast("long").desc)
     val base = df
       .withColumn("__v", value)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(key).orderBy(col(time).desc)))
     val withMeans = windows.foldLeft(base) { case (acc, (name, seconds)) =>
-      val frame = w.rangeBetween(-seconds, 0)
+      val frame = w.rangeBetween(Window.unboundedPreceding, seconds)
       acc.withColumn(name, sum(col("__v")).over(frame).cast("double") /
         count(lit(1)).over(frame))
     }

@@ -62,11 +62,16 @@ object DimensionRefresh {
       (lit(1700000000000L) + col("s_suppkey") * 86400123L).as("first_open_ms"),
       (lit(1706000000000L) + col("s_suppkey") * 3600999L).as("next_funding_ms"))
 
+  // A dimension is one row per listed pair or contract: sorting it in one
+  // partition gives the same global order as `orderBy` without the
+  // range-partitioning sample job, which runs the whole plan an extra time.
   def buildSpot(spark: SparkSession, dir: String): DataFrame =
-    spotTransform(rawSpot(spark, dir)).orderBy("ticker_id")
+    spotTransform(rawSpot(spark, dir))
+      .repartition(1).sortWithinPartitions("ticker_id")
 
   def buildFutures(spark: SparkSession, dir: String): DataFrame =
-    futuresTransform(rawFutures(spark, dir)).orderBy("contract_id")
+    futuresTransform(rawFutures(spark, dir))
+      .repartition(1).sortWithinPartitions("contract_id")
 
   val spotOracleSql: String =
     """WITH raw AS (

@@ -103,7 +103,9 @@ object FundingStats {
             .as("predicted_funding_rate"),
           (col("latest_value") / 10000.0 * AnnualFactor).as("funding_8h"))
           ++ horizonCols: _*)
-      .orderBy("symbol")
+      // one row per symbol: sorted in one partition, because a range-
+      // partitioned orderBy samples its input first, re-running the window
+      .repartition(1).sortWithinPartitions("symbol")
   }
 
   /** DuckDB oracle for [[build]] — same operation order everywhere a double

@@ -59,8 +59,11 @@ object Lending {
       (col("value") / 1000.0).cast("decimal(18,6)").cast("string").as("rate"),
       col("ts").as("observed_at"))
 
+  // one row per loan term: a single-partition sort orders it without the
+  // sample job a range-partitioned `orderBy` runs first
   def build(spark: SparkSession, dir: String): DataFrame =
-    transform(rawFromEvents(spark, dir)).orderBy("loan_duration_days")
+    transform(rawFromEvents(spark, dir))
+      .repartition(1).sortWithinPartitions("loan_duration_days")
 
   val oracleSql: String =
     """WITH raw AS (

@@ -67,7 +67,8 @@ object MainDag {
     val stats = FundingStats.build(spark, dir)
     Sinks.overwriteParquet(stats, s"$warehouse/kucoin_funding_stats")
 
-    def n(t: String): Long = spark.read.parquet(s"$warehouse/$t").count()
+    // counts come from the footers the sinks just swapped in: no job
+    def n(t: String): Long = Sinks.parquetRowCount(spark, s"$warehouse/$t")
     TickResult(
       n("kucoin_active_futures"), n("kucoin_active_spot_pairs"),
       n("kucoin_lending_rates"), n("kucoin_funding_rates"),

@@ -13,12 +13,21 @@ class MainDagSpec extends SparkSpec {
   test("one tick lands all five tables; a second tick is idempotent") {
     val wh = Files.createTempDirectory("dag-wh").toFile.getAbsolutePath
     val dir = "/root/testdata/sf0.001"
+    // the footer-summed counts equal Spark's own count of each table,
+    // whose directory also holds _SUCCESS and .crc files
+    def n(t: String): Long = spark.read.parquet(s"$wh/$t").count()
+    def sparkCounts = MainDag.TickResult(
+      n("kucoin_active_futures"), n("kucoin_active_spot_pairs"),
+      n("kucoin_lending_rates"), n("kucoin_funding_rates"),
+      n("kucoin_funding_stats"))
     val r1 = MainDag.runTick(spark, dir, wh)
     assert(r1.futures > 0 && r1.spotPairs > 0 && r1.lending > 0 &&
       r1.fundingRows > 0 && r1.statsRows > 0, r1.toString)
+    assert(r1 === sparkCounts)
 
     val r2 = MainDag.runTick(spark, dir, wh)
     assert(r2 === r1, "retried tick must converge to the same state")
+    assert(r2 === sparkCounts)
 
     // the stats table equals the flagship query's direct result
     val fromDag = spark.read.parquet(s"$wh/kucoin_funding_stats")

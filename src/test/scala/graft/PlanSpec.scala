@@ -46,6 +46,13 @@ class PlanSpec extends SparkSpec {
       .count(_.startsWith("Window ["))
     assert(windowNodes == 1, s"expected exactly one Window node:\n$p")
     assert(p.contains("BroadcastHashJoin"), p)
+    // horizon frames grow from the partition start; a frame opening at
+    // CURRENT ROW is the sliding form Spark re-aggregates on every row
+    assert(!p.contains("specifiedwindowframe(RowFrame, currentrow$()"), p)
+    graft.ops.Stats.referenceHorizons.foreach { h =>
+      assert(p.contains("specifiedwindowframe(RowFrame, " +
+        s"unboundedpreceding$$(), ${h.sessions - 1}))"), s"${h.name}:\n$p")
+    }
   }
 
   test("e1 brute-force top-k: broadcast query vector + TakeOrdered merge") {

@@ -129,4 +129,25 @@ class SinksSpec extends SparkSpec {
     assert(after.count() === before - onePartBefore + 1,
       "untouched partitions must survive")
   }
+
+  test("parquetRowCount equals Spark's count past hidden files") {
+    import spark.implicits._
+    val path = tmp("rowcount") + "/t"
+    (1 to 50).map(i => (i % 3, i)).toDF("p", "v")
+      .repartition(4).write.partitionBy("p").parquet(path)
+    // entries Spark's file index skips: not parquet, so reading any of
+    // them as a data file would throw
+    def junk(rel: String): Unit = {
+      val f = new java.io.File(s"$path/$rel")
+      f.getParentFile.mkdirs()
+      Files.write(f.toPath, "x".getBytes)
+    }
+    junk(".hidden")
+    junk("_notes")
+    junk("p=1/.part.tmp")
+    junk("p=2/upload._COPYING_")
+    junk("_tmp/part-0.parquet")
+    assert(Sinks.parquetRowCount(spark, path) === 50L)
+    assert(spark.read.parquet(path).count() === 50L)
+  }
 }

@@ -133,4 +133,37 @@ class StagedStatsSpec extends SparkSpec {
     val (_, nulls, mn, mx) = got(got.keys.find(_._2 == "allnull").get)
     assert(nulls == 3L && mn == "null" && mx == "null")
   }
+
+  test("dates written in LEGACY rebase mode take the aggregate path") {
+    import spark.implicits._
+    val dir = tmp()
+    val key = "spark.sql.parquet.datetimeRebaseModeInWrite"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "LEGACY")
+    try {
+      // pre-1582 dates: the file stores hybrid-calendar days, which
+      // decode to other dates when read as proleptic Gregorian
+      val df = Seq((1L, "1000-01-01"), (2L, "1500-06-15"), (3L, "2024-01-31"))
+        .toDF("k", "ds").withColumn("dt", col("ds").cast("date")).drop("ds")
+      Snapshots.append(df.coalesce(1), dir)
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the writer really marked the file as legacy-rebased
+    val data = new org.apache.hadoop.fs.Path(dir, "data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = fs.globStatus(new org.apache.hadoop.fs.Path(data, "*/*.parquet"))
+      .filter(_.getLen > 0)
+    assert(files.nonEmpty)
+    files.foreach { st =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
+          spark.sparkContext.hadoopConfiguration))
+      try assert(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .containsKey("org.apache.spark.legacyDateTime"), st.getPath)
+      finally r.close()
+    }
+    assertParity(dir, Seq("k", "dt"))
+    val (_, _, mn, mx) = statsOf(dir).collectFirst {
+      case ((_, "dt"), v) => v }.get
+    assert(mn == "v:1000-01-01" && mx == "v:2024-01-31", (mn, mx))
+  }
 }
