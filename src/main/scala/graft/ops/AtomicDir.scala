@@ -1,11 +1,11 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe directory replacement shared by every sink that rewrites a
-  * parquet table in place ([[Upsert]], [[Sinks.overwriteParquet]]):
-  * write to a sibling staging dir, swap via rename pairs, and heal an
+/** Crash-safe whole-table replacement shared by the two plain-parquet
+  * sinks ([[Upsert.upsertParquet]], [[Sinks.overwriteParquet]]): write
+  * to a sibling staging dir, swap via a rename pair, and heal an
   * interrupted swap on the next call. Spark's own `mode("overwrite")`
   * deletes the target before the job commits, so a crash mid-write (or
   * a concurrent read mid-rewrite) loses or misses the table — this
@@ -17,69 +17,31 @@ import org.apache.spark.sql.DataFrame
   * mixed/partial/empty result, because the whole directory moves in one
   * rename and the pinned old paths vanish together. A reader arriving in
   * the instant between the renames fails at path resolution; the next
-  * maintenance pass heals. Partition-level swaps are individually atomic
-  * — cross-partition atomicity is not provided, but a stale reader still
-  * cannot assemble a torn SUCCESS for the same reason.
+  * call heals. Row-level maintenance (key deletes, compaction, merges
+  * that touch a few files) belongs to the snapshot format
+  * ([[Snapshots]]), whose manifest commit needs no swap at all.
   */
 private[ops] object AtomicDir {
 
-  /** Filesystem of `path` via the Hadoop FS API — correct on HDFS/S3A/
-    * local alike (a `java.io.File` probe silently misfires off-local). */
-  def fsFor(df: DataFrame, path: String): (FileSystem, HPath) = {
-    val p = new HPath(path)
-    (p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), p)
-  }
-
-  def stagingFor(target: HPath): HPath =
+  private def stagingFor(target: HPath): HPath =
     new HPath(target.getParent, target.getName + "__staging__")
 
   /** Sibling dir where the previous copy is parked during a swap — NEVER
-    * inside the table directory, where partition discovery would read it
-    * as a phantom partition. */
-  def oldFor(target: HPath): HPath =
+    * inside the table directory, where a reader would list it as data. */
+  private def oldFor(target: HPath): HPath =
     new HPath(target.getParent, target.getName + "__old__")
 
-  /** Parking dir for partitions a delete has fully EMPTIED. Distinct from
-    * [[oldFor]] because recovery must treat the two oppositely: an
-    * interrupted swap restores `__old__` (the replacement never landed),
-    * but restoring a fully-deleted partition would resurrect rows the
-    * delete had already removed — so [[recoverInterruptedSwap]] PURGES
-    * this dir instead. */
-  def droppedFor(target: HPath): HPath =
-    new HPath(target.getParent, target.getName + "__dropped__")
-
-  /** Crash recovery, run BEFORE the existence probe of every caller: a
-    * crash between swap renames leaves the previous copy parked at
-    * `<target>__old__` (whole table) or `<target>__old__/<part>=...`
-    * (partition dirs). Restore whatever the interrupted swap had not yet
-    * replaced, then clear the parking dir. */
-  def recoverInterruptedSwap(fs: FileSystem, target: HPath): Unit = {
-    // partitions parked here were fully emptied by an interrupted delete:
-    // finishing that delete means discarding them, never restoring
-    val dropped = droppedFor(target)
-    if (fs.exists(dropped)) fs.delete(dropped, true)
+  /** Crash recovery, run BEFORE the existence probe: a crash between the
+    * swap renames leaves the previous copy parked at `<target>__old__`
+    * with no table in place — the parked copy IS the table, so rename it
+    * back. A parked copy beside a present table is the leftover of a
+    * completed swap whose cleanup did not run, and is dropped. */
+  private def recoverInterruptedSwap(fs: FileSystem, target: HPath): Unit = {
     val old = oldFor(target)
     if (!fs.exists(old)) return
-    if (!fs.exists(target)) {
-      // whole-table swap died between the renames: the parked copy IS
-      // the table
-      if (!fs.rename(old, target))
-        throw new java.io.IOException(s"recovery rename $old -> $target failed")
-      return
-    }
-    // partition-level swap: restore only the parked partition dirs whose
-    // replacement never landed; everything else is a completed-swap
-    // leftover (its target exists) and is safe to drop
-    fs.listStatus(old).foreach { st =>
-      val dest = new HPath(target, st.getPath.getName)
-      if (st.isDirectory && st.getPath.getName.contains("=") &&
-        !fs.exists(dest)) {
-        if (!fs.rename(st.getPath, dest))
-          throw new java.io.IOException(
-            s"recovery rename ${st.getPath} -> $dest failed")
-      }
-    }
-    fs.delete(old, true)
+    if (fs.exists(target)) fs.delete(old, true)
+    else if (!fs.rename(old, target))
+      throw new java.io.IOException(s"recovery rename $old -> $target failed")
   }
 
   /** Swap a fully-written staging dir into place: rename current aside
@@ -89,7 +51,7 @@ private[ops] object AtomicDir {
     * [[recoverInterruptedSwap]] on the next call; the visibility gap is
     * the instant between the renames — the price of running on a store
     * without atomic directory replace. */
-  def swapInto(fs: FileSystem, staging: HPath, target: HPath,
+  private def swapInto(fs: FileSystem, staging: HPath, target: HPath,
       old: HPath): Unit = {
     if (fs.exists(old)) fs.delete(old, true)
     val hadPrev = fs.exists(target)
@@ -102,16 +64,21 @@ private[ops] object AtomicDir {
     if (hadPrev) fs.delete(old, true)
   }
 
-  /** Stage-and-swap replacement of `path` with `df` (heals interrupted
-    * swaps first). The write targets the staging dir, so the table stays
-    * readable until the final rename pair. */
-  def replaceWith(df: DataFrame, path: String)(
-      write: (DataFrame, String) => Unit): Unit = {
-    val (fs, target) = fsFor(df, path)
+  /** Stage-and-swap replacement of the parquet table at `path` with the
+    * frame `build` returns. Heals an interrupted swap first, then hands
+    * `build` whether a table exists, so a builder that reads the current
+    * table (an upsert's merge) probes it once, after recovery. The write
+    * targets the staging dir, so the table stays readable until the
+    * final rename pair. */
+  def replaceWith(spark: SparkSession, path: String)(
+      build: Boolean => DataFrame): Unit = {
+    val target = new HPath(path)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverInterruptedSwap(fs, target)
+    val next = build(fs.exists(target))
     val staging = stagingFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
-    write(df, staging.toString)
+    next.write.mode("overwrite").parquet(staging.toString)
     swapInto(fs, staging, target, oldFor(target))
   }
 }

@@ -104,8 +104,8 @@ object Layout {
     * range layout is strictly better for single-key point DML (see
     * DmlScaleProbe / BASELINE.md round 8: 1 file touched under range
     * vs 11 under an unrelated interleave). Write the result with
-    * `.write.parquet(...)` (or hand it to [[Compact]]'s swap for an
-    * in-place OPTIMIZE). */
+    * `.write.parquet(...)`, or use `Snapshots.optimize` for an
+    * in-place OPTIMIZE of a snapshot table. */
   def cluster(df: DataFrame, cols: Seq[String], bits: Int = 8,
       numFiles: Int = 0): DataFrame = {
     require(cols.nonEmpty, "cluster needs at least one column")

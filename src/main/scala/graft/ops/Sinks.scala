@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Batch sinks (SURVEY.md S8-S10).
   *
@@ -13,14 +13,16 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the job commits, so [[overwriteParquet]] goes through the shared
   * stage-and-swap ([[AtomicDir]]): the previous table stays readable
   * until the final rename pair, and a crash at any point is healed on
-  * the next call.
+  * the next call. Region-restricted rewrites and clustered layouts are
+  * the snapshot format's job (`Snapshots.replaceWhere`,
+  * `Snapshots.optimize`), whose manifest commits carry no
+  * delete-before-commit window.
   */
 object Sinks {
 
   /** S8/S9: crash-safe truncate-and-reload / drop-recreate-from-frame. */
   def overwriteParquet(df: DataFrame, path: String): Unit =
-    AtomicDir.replaceWith(df, path)(
-      (d, staging) => d.write.mode("overwrite").parquet(staging))
+    AtomicDir.replaceWith(df.sparkSession, path)(_ => df)
 
   /** Row count of the parquet table at `path`, summed from the footers
     * of its data files on the driver: no Spark job, one footer read per
@@ -47,19 +49,6 @@ object Sinks {
     rows(fs.getFileStatus(root))
   }
 
-  /** 100 TB layout: overwrite partitioned by a derived date column so
-    * time-range queries prune files (dynamic partition overwrite only
-    * rewrites the partitions present in `df`, not the whole table).
-    * Note the delete-before-commit window applies per touched partition;
-    * for crash-critical tables use [[Upsert.upsertParquetPartitioned]],
-    * whose per-partition swap parks the previous copy. */
-  def overwritePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
   /** S10: tab-separated, headerless CSV staging file
     * (to_csv(sep="\t", header=False), active_futures_etl.py:103).
     * escape='"' makes embedded quotes RFC-4180 doubled ("a""b") instead
@@ -71,18 +60,4 @@ object Sinks {
       .option("sep", "\t").option("header", "false")
       .option("escape", "\"")
       .csv(path)
-
-  /** Clustered write: range-partition into `files` output files on
-    * `sortCols` and sort within each, so every parquet row group covers a
-    * narrow key range. Point/range predicates on those columns then skip
-    * most row groups via footer min/max stats — the file-layout lever
-    * that, combined with `partitionBy` date directories
-    * ([[overwritePartitioned]]), decides how much of 100 TB a query
-    * actually reads. Also the fix for the small-files problem: `files`
-    * bounds output file count regardless of upstream parallelism. */
-  def writeClustered(df: DataFrame, path: String, files: Int,
-      sortCols: Column*): Unit =
-    df.repartitionByRange(files, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .write.mode("overwrite").parquet(path)
 }

@@ -3,8 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
-  ShortType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
+  LongType, ShortType}
 
 import graft.functions.TextFns
 
@@ -290,6 +290,26 @@ object TextDedup {
     * Past it the distributed label-propagation loop runs unchanged. */
   private val DriverUnionFindMaxEdges = 1L << 20
 
+  /** Byte budget of a label frame [[dedupClusters]] broadcasts: 4M rows
+    * of two 8-byte integral keys, 64 MB. */
+  private val BroadcastLabelBytes = 4000000L * 2 * 8
+
+  /** Assumed width of one non-integral doc id (string URLs, binary
+    * hashes). The true width is unknown until the labels are built, so
+    * the budget divides by a generous guess: 8× a long. */
+  private val WideKeyBytes = 64L
+
+  /** Whether a label frame of `rows` rows keyed by `keyType` fits the
+    * broadcast budget: up to 4M rows for integral ids, 500K for any
+    * other key type. Past it the label side shuffles like the rest. */
+  private[graft] def broadcastLabels(keyType: DataType, rows: Long): Boolean = {
+    val keyBytes = keyType match {
+      case ByteType | ShortType | IntegerType | LongType => 8L
+      case _ => WideKeyBytes
+    }
+    rows <= BroadcastLabelBytes / (2 * keyBytes)
+  }
+
   /** Connected components of a small collected edge list: union-find
     * with path halving, then one pass labels every vertex with the
     * MINIMUM vertex id of its component — exactly the fixpoint the
@@ -404,11 +424,12 @@ object TextDedup {
     // budget the label side broadcasts, so edges/docs never shuffle.
     // Same decide-from-the-one-known-number discipline as
     // Graph.pageRank's maxBroadcastNodes; labels rows are bounded by
-    // the pair-graph vertex count, far below the corpus.
-    val broadcastLabelRows = 4000000L
+    // the pair-graph vertex count, far below the corpus. The budget is
+    // in bytes ([[broadcastLabels]]): wide doc ids broadcast fewer rows.
+    val keyType = edges.schema("src").dataType
     var labelRows = edgeRows // vertices <= symmetrized edge rows
     def labelSide(df: DataFrame): DataFrame =
-      if (labelRows <= broadcastLabelRows) broadcast(df) else df
+      if (broadcastLabels(keyType, labelRows)) broadcast(df) else df
     // Iterate ONLY over the pair-graph's vertex set: a doc with no
     // near-dup edge can never change its label, and in a real corpus
     // near-dup vertices are a small fraction of all docs — the loop's
@@ -427,7 +448,7 @@ object TextDedup {
     // — non-integral keys and NULL-bearing edges keep the loop.
     val driverLabels: Option[Seq[(Long, Long)]] =
       if (edgeRows > DriverUnionFindMaxEdges) None
-      else edges.schema("src").dataType match {
+      else keyType match {
         case ByteType | ShortType | IntegerType | LongType =>
           val collected = edges.collect()
           if (collected.exists(r => r.isNullAt(0) || r.isNullAt(1))) None
@@ -440,10 +461,9 @@ object TextDedup {
       case Some(lab) =>
         import spark.implicits._
         labelRows = lab.size.toLong
-        val keyT = edges.schema("src").dataType
         lab.toDF("doc_id", "cluster_id")
-          .select(col("doc_id").cast(keyT).as("doc_id"),
-            col("cluster_id").cast(keyT).as("cluster_id"))
+          .select(col("doc_id").cast(keyType).as("doc_id"),
+            col("cluster_id").cast(keyType).as("cluster_id"))
       case None => edges.select(col("src").as("doc_id")).distinct()
         .withColumn("cluster_id", col("doc_id"))
     }

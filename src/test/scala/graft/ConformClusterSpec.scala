@@ -1,12 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ops.{Conform, Sinks}
+import graft.ops.Conform
 
 class ConformClusterSpec extends SparkSpec {
 
@@ -31,33 +27,5 @@ class ConformClusterSpec extends SparkSpec {
       Conform.conform(missingRequired, declared)
     }
     assert(e.getMessage.contains("symbol"))
-  }
-
-  test("writeClustered: bounded file count + row-group skipping on the sort key") {
-    val path = Files.createTempDirectory("clustered").toFile.getAbsolutePath + "/t"
-    val events = Tables.eventsRawTs(spark, "/root/testdata/sf0.01")
-    Sinks.writeClustered(events, path, files = 8, col("ts"))
-
-    val files = new java.io.File(path).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files === 8, s"expected 8 output files, got $files")
-
-    // a narrow ts range must read far fewer rows than the table holds —
-    // parquet row-group min/max stats skip the rest (scan metric
-    // numOutputRows counts rows surviving the pushed filter)
-    val total = spark.read.parquet(path).count()
-    val lo = 1704672000000000000L // 2024-01-08
-    val hi = 1704758400000000000L // 2024-01-09
-    val reread = spark.read.parquet(path)
-    val narrow = reread
-      .filter(Tables.tsAtLeastNanos(reread, lo) &&
-        Tables.tsBelowNanos(reread, hi))
-    val n = narrow.count()
-    assert(n > 0 && n < total / 5, s"narrow slice $n of $total")
-    val scan = narrow.queryExecution.executedPlan.collect {
-      case f: FileSourceScanExec => f
-    }.head
-    assert(scan.metadata("PushedFilters").contains("GreaterThanOrEqual(ts"),
-      scan.metadata("PushedFilters"))
   }
 }

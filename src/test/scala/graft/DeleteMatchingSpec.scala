@@ -78,4 +78,23 @@ class DeleteMatchingSpec extends SparkSpec {
     assert(Snapshots.read(spark, root).select("id").as[Long]
       .collect().sorted.toSeq == (3L to 10L))
   }
+
+  test("path-special string keys and a NULL delete exactly the matching rows") {
+    // keys are matched by value and never encoded into a directory
+    // name, so '/', ':', '%' and '=' need no escaping and no refusal;
+    // "10%3A30" (the Hive-escaped spelling of "10:30") must survive
+    val root = freshRoot()
+    val rows = Seq(Some("a/b") -> 1L, Some("10:30") -> 2L,
+      Some("a%b") -> 3L, Some("a%b") -> 4L, Some("k=v") -> 5L,
+      Some("10%3A30") -> 6L, Some("plain") -> 7L, None -> 8L)
+    Snapshots.append(rows.toDF("k", "v"), root)
+    val r = Snapshots.deleteMatching(spark, root,
+      Seq(Some("a/b"), Some("10:30"), Some("a%b"), Some("k=v"),
+        None: Option[String]).toDF("k"), Seq("k"))
+    assert(r.version == 2)
+    // the NULL-keyed row stays: a NULL tombstone matches nothing
+    assert(Snapshots.read(spark, root).as[(Option[String], Long)]
+      .collect().toSet ==
+      Set(Some("10%3A30") -> 6L, Some("plain") -> 7L, None -> 8L))
+  }
 }

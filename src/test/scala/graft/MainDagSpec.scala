@@ -20,14 +20,24 @@ class MainDagSpec extends SparkSpec {
       n("kucoin_active_futures"), n("kucoin_active_spot_pairs"),
       n("kucoin_lending_rates"), n("kucoin_funding_rates"),
       n("kucoin_funding_stats"))
+    // every sink swapped its staging dir in and cleaned up after itself:
+    // the warehouse holds the five tables and no __staging__ or __old__
+    // sibling
+    def assertOnlyTables(): Unit =
+      assert(new java.io.File(wh).listFiles().map(_.getName).sorted.toSeq ===
+        Seq("kucoin_active_futures", "kucoin_active_spot_pairs",
+          "kucoin_funding_rates", "kucoin_funding_stats",
+          "kucoin_lending_rates"))
     val r1 = MainDag.runTick(spark, dir, wh)
     assert(r1.futures > 0 && r1.spotPairs > 0 && r1.lending > 0 &&
       r1.fundingRows > 0 && r1.statsRows > 0, r1.toString)
     assert(r1 === sparkCounts)
+    assertOnlyTables()
 
     val r2 = MainDag.runTick(spark, dir, wh)
     assert(r2 === r1, "retried tick must converge to the same state")
     assert(r2 === sparkCounts)
+    assertOnlyTables()
 
     // the stats table equals the flagship query's direct result
     val fromDag = spark.read.parquet(s"$wh/kucoin_funding_stats")

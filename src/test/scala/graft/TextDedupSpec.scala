@@ -244,4 +244,19 @@ class TextDedupSpec extends SparkSpec {
       .orderBy("doc_id").as[(Long, String)].collect().toSeq
     assert(kept == Seq((1L, "twice seen\na"), (2L, "twice seen\nb")))
   }
+
+  test("dedupClusters label broadcast is gated by bytes, not rows alone") {
+    import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
+    // integral ids keep the 4M-row cap
+    assert(TextDedup.broadcastLabels(LongType, 4000000L))
+    assert(!TextDedup.broadcastLabels(LongType, 4000001L))
+    // wider ids get the same byte budget, so a lower row cap
+    Seq(StringType, BinaryType).foreach { t =>
+      assert(TextDedup.broadcastLabels(t, 500000L), t)
+      assert(!TextDedup.broadcastLabels(t, 500001L), t)
+      assert(!TextDedup.broadcastLabels(t, 4000000L), t)
+    }
+    // a small pair graph (the corpus scale) broadcasts whatever the key
+    assert(TextDedup.broadcastLabels(StringType, 600L))
+  }
 }
